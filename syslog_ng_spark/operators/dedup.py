@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from .lineage import truncate_lineage
@@ -32,7 +32,7 @@ def _norm_text(c: Column) -> Column:
     return F.regexp_replace(F.lower(F.trim(c)), r"\s+", " ")
 
 
-def _cap_buckets(df: DataFrame, part_cols: list[str], cap: int):
+def _cap_buckets(df: DataFrame, part_cols: list[str], cap: int | None):
     """LSH skew guard: drop every bucket larger than ``cap`` BEFORE the
     candidate self-join (one boilerplate bucket of m rows otherwise costs
     m² pairs). The window count rides the SAME partitioning the join
@@ -40,9 +40,10 @@ def _cap_buckets(df: DataFrame, part_cols: list[str], cap: int):
 
     Returns ``(kept, dropped)`` where ``dropped`` has one row per dropped
     bucket with its size — the audit trail that makes the cap non-silent
-    (callers can count/log it, or route those buckets to exact_dedup)."""
-    from pyspark.sql import Window as W  # noqa: PLC0415
-
+    (callers can count/log it, or route those buckets to exact_dedup).
+    ``cap=None`` disables the guard: ``(df, None)``."""
+    if cap is None:
+        return df, None
     wb = W.partitionBy(*part_cols)
     tagged = df.withColumn("_n", F.count(F.lit(1)).over(wb))
     kept = tagged.filter(F.col("_n") <= cap).drop("_n")
@@ -52,6 +53,66 @@ def _cap_buckets(df: DataFrame, part_cols: list[str], cap: int):
         .dropDuplicates(part_cols)
     )
     return kept, dropped
+
+
+def _bucket_pairs(
+    rows: DataFrame,
+    keys: list[str],
+    payload: tuple[str, ...] = (),
+    pred: Column | None = None,
+) -> DataFrame:
+    """The candidate-pair kernel every near-dup family shares: self-join
+    the key rows ``(id, *keys, *payload)`` on ``keys`` with
+    ``a.id < b.id``, keep the joined rows where ``pred`` holds (a Column
+    over the two sides aliased ``a`` and ``b``, applied BEFORE the dedup
+    shuffle so rejected pairs are never shuffled), and dedupe to one row
+    per pair.
+
+    Returns ``(id_a, id_b, n_shared, <p>_a, <p>_b for p in payload)``;
+    ``n_shared`` counts the keys the pair shares (after ``pred``) and
+    comes from the same aggregate that dedupes, so a caller that drops
+    it pays nothing for it. Payload must be a function of ``id`` (it is
+    carried through with ``first``)."""
+    cond = F.col("a.id") < F.col("b.id")
+    for k in keys:
+        cond = cond & (F.col(f"a.{k}") == F.col(f"b.{k}"))
+    joined = rows.alias("a").join(rows.alias("b"), cond)
+    if pred is not None:
+        joined = joined.filter(pred)
+    return joined.groupBy(
+        F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")
+    ).agg(
+        F.count(F.lit(1)).alias("n_shared"),
+        *[F.first(f"{s}.{p}").alias(f"{p}_{s}") for p in payload for s in "ab"],
+    )
+
+
+def _finish_near_dup(
+    out: DataFrame,
+    dropped: DataFrame | None,
+    cached: list,
+    eager: bool = False,
+    reliable_checkpoint: bool | None = None,
+) -> DataFrame:
+    """The epilogue every near-dup family shares: the one audit record
+    and the lifetime of what the family cached.
+
+    ``out._dropped_buckets`` is the ``_cap_buckets`` audit frame (one
+    row per skew-dropped bucket with its ``bucket_size``; lazy — count
+    it only if you need it) or ``None`` when uncapped. ``cached`` holds
+    persisted frames and broadcasts (``None`` entries are skipped):
+    eager materializes ``out`` via ``truncate_lineage`` and frees them
+    at once; lazy frees them when the result is garbage-collected."""
+    cached = [c for c in cached if c is not None]
+    if eager:
+        out = truncate_lineage(out, reliable=reliable_checkpoint)
+        for c in cached:
+            c.unpersist()
+    else:
+        for c in cached:
+            _unpersist_on_gc(out, c)
+    out._dropped_buckets = dropped
+    return out
 
 
 def _ensure_parallelism(df: DataFrame) -> DataFrame:
@@ -193,17 +254,18 @@ def minhash_lsh(
     """Near-duplicate PAIRS (id_a < id_b, jaccard ≥ threshold).
 
     Plan shape: narrow signature computation → explode to ``bands`` rows
-    per doc → shuffle on (band, band_hash) — tiny rows — → self-join
-    within buckets → exact shingle-Jaccard verification only on candidate
-    pairs, recomputing shingles on just those rows (the shingle arrays
-    never persist and never enter a wide shuffle). At 100 TB the band
-    join is the only wide stage and its input is ~bands×24 bytes per doc.
+    per doc → shuffle on (band, band_hash) — tiny rows — → bucket
+    self-join (``_bucket_pairs``) → exact shingle-Jaccard verification
+    only on candidate pairs, recomputing shingles on just those rows (the
+    shingle arrays never persist and never enter a wide shuffle). At
+    100 TB the band join is the only wide stage and its input is
+    ~bands×24 bytes per doc.
 
     ``max_bucket_size``: LSH buckets larger than this are dropped before
     the self-join — one boilerplate-text bucket of m docs otherwise costs
-    m² candidate pairs (the classic LSH skew kill). When ``eager``, the
-    number of dropped buckets is recorded on the result as
-    ``out._lsh_dropped_buckets`` (a bucket that big means the texts are
+    m² candidate pairs (the classic LSH skew kill). The dropped buckets
+    are recorded on the result as the frame ``out._dropped_buckets``
+    (see ``_finish_near_dup``; a bucket that big means the texts are
     boilerplate near-identical; route them to ``exact_dedup`` instead).
     Set ``None`` to disable.
 
@@ -237,44 +299,19 @@ def minhash_lsh(
         ).alias("bb"),
     ).select("id", F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh"))
     banded = banded.persist()
-
-    dropped = None
-    if max_bucket_size is not None:
-        banded_ok, dropped = _cap_buckets(banded, ["band", "bh"], max_bucket_size)
-    else:
-        banded_ok = banded
-
-    left = banded_ok.alias("a")
-    right = banded_ok.alias("b")
-    cand = (
-        left.join(
-            right,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    kept, dropped = _cap_buckets(banded, ["band", "bh"], max_bucket_size)
     # cand is read 3× by the verify stage (pairs + two id semi-joins);
     # it is tiny (two longs per candidate pair) — cache it.
-    cand = cand.persist()
+    cand = _bucket_pairs(kept, ["band", "bh"]).select("id_a", "id_b").persist()
     verified = _exact_jaccard_on_pairs(cand, df, text_col, id_col, threshold)
-    if eager:
-        out = truncate_lineage(verified, reliable=reliable_checkpoint)
-        # audit the cap while the banded cache is still hot (one cached
-        # window pass, no recompute) — see _cap_buckets docstring
-        out._lsh_dropped_buckets = dropped.count() if dropped is not None else 0
-        banded.unpersist()
-        cand.unpersist()
-        return out
-    _unpersist_on_gc(verified, banded)
-    _unpersist_on_gc(verified, cand)
-    return verified
+    return _finish_near_dup(
+        verified, dropped, [banded, cand], eager, reliable_checkpoint
+    )
 
 
-def _unpersist_on_gc(result: DataFrame, cached: DataFrame) -> None:
-    """Free ``cached`` when ``result`` is garbage-collected — keeps the
+def _unpersist_on_gc(result: DataFrame, cached) -> None:
+    """Free ``cached`` (anything with ``.unpersist()``: a persisted frame
+    or a broadcast) when ``result`` is garbage-collected — keeps the
     operator lazy (one execution) without leaking cache entries across a
     long session. Spark's ContextCleaner only reclaims RDD caches; the
     SQL CacheManager pins DataFrame persists until an explicit unpersist."""
@@ -419,7 +456,7 @@ def _auto_block_chunks(
     d is bounded above by n_chunks − prefilter_hamming (the pigeonhole
     recall guarantee) and by 3 (C(8,4)=70 tables is past the
     cost/recall knee). A sampled estimate can miss a rare hot key — the
-    skew-cap audit (``_lsh_dropped_buckets``) remains the non-silent
+    skew-cap audit (``_dropped_buckets``) remains the non-silent
     backstop, exactly as with explicit keying."""
     import collections  # noqa: PLC0415
     import itertools  # noqa: PLC0415
@@ -479,8 +516,8 @@ def _simhash_candidates(
     prefilter_hamming: int | None = None,
     block_chunks: int = 1,
 ):
-    """Candidate (id_a, id_b, fp_a, fp_b) pairs by fingerprint-block
-    pigeonhole (Manku et al. WWW'07 §3, simfinder block-permutation):
+    """Candidate (id_a, id_b, n_shared, fp_a, fp_b) pairs by fingerprint-
+    block pigeonhole (Manku et al. WWW'07 §3, simfinder block-permutation):
     split the 64-bit fingerprint into ``n_chunks`` chunks and build one
     table per ``block_chunks``-sized chunk COMBINATION, keyed on the
     concatenated chunk values. A pair at hamming ≤ n_chunks−block_chunks
@@ -534,31 +571,13 @@ def _simhash_candidates(
     # chunked is self-joined, but both sides are the identical subplan —
     # Spark's ReusedExchange computes the fingerprint UDF once per query,
     # no persist needed (and none to leak).
-    dropped = None
-    if max_bucket_size is not None:
-        chunked, dropped = _cap_buckets(chunked, ["chunk", "ck"], max_bucket_size)
-    a, b = chunked.alias("a"), chunked.alias("b")
-    joined = a.join(
-        b,
-        (F.col("a.chunk") == F.col("b.chunk"))
-        & (F.col("a.ck") == F.col("b.ck"))
-        & (F.col("a.id") < F.col("b.id")),
-    )
+    chunked, dropped = _cap_buckets(chunked, ["chunk", "ck"], max_bucket_size)
+    # hamming is two longs already in hand (xor + bit_count), so the
+    # prefilter drops the noise before the dedup shuffle
+    pred = None
     if prefilter_hamming is not None:
-        # applied BEFORE the dedup shuffle: hamming is two longs already
-        # in hand (xor + bit_count), so the noise never gets shuffled
-        joined = joined.filter(
-            F.bit_count(F.col("a.fp").bitwiseXOR(F.col("b.fp"))) <= prefilter_hamming
-        )
-    cand = (
-        joined.select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.fp").alias("fp_a"),
-            F.col("b.fp").alias("fp_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
+        pred = hamming64(F.col("a.fp"), F.col("b.fp")) <= prefilter_hamming
+    cand = _bucket_pairs(chunked, ["chunk", "ck"], payload=("fp",), pred=pred)
     return cand, dropped
 
 
@@ -627,8 +646,9 @@ def simhash_near_dup(
     from the start) is the other scale-safe candidate generator for the
     same Jaccard predicate.
 
-    When ``eager``, the verified pair set is materialized and the number
-    of skew-capped buckets is recorded as ``out._lsh_dropped_buckets``."""
+    When ``eager``, the verified pair set is materialized. Either way
+    the skew-capped buckets ride on the result as the frame
+    ``out._dropped_buckets`` (see ``_finish_near_dup``)."""
     if block_chunks == "auto":
         block_chunks = _auto_block_chunks(
             df, text_col, features, n_chunks, max_bucket_size, prefilter_hamming
@@ -640,15 +660,9 @@ def simhash_near_dup(
     )
     pairs = cand.select("id_a", "id_b").persist()
     out = _exact_jaccard_on_pairs(pairs, df, text_col, id_col, threshold)
-    if eager:
-        res = truncate_lineage(out, reliable=reliable_checkpoint)
-        res._lsh_dropped_buckets = dropped.count() if dropped is not None else 0
-        res._block_chunks = block_chunks
-        pairs.unpersist()
-        return res
-    _unpersist_on_gc(out, pairs)
-    out._block_chunks = block_chunks
-    return out
+    res = _finish_near_dup(out, dropped, [pairs], eager, reliable_checkpoint)
+    res._block_chunks = block_chunks
+    return res
 
 
 # --- exact pairwise Jaccard (small-scale oracle) --------------------------------
@@ -888,40 +902,22 @@ def dedup_keep_best(
     ``component`` (singletons: component = own id). Plan shape: the
     component map is pair-derived and therefore tiny relative to the
     corpus (only clustered ids appear); the argmax is one
-    ``max_by(id, (score, -id))`` partial-aggregating groupBy on it, and
-    the corpus pays exactly two id-keyed semi/anti joins — text never
+    ``row_number`` rank per component on it (score descending, NULL
+    scores last, then min id — the same for every id type), and the
+    corpus pays exactly two id-keyed semi/anti joins — text never
     shuffles."""
     comp = connected_components(pairs, id_a=id_a, id_b=id_b)
     scored = comp.join(
         df.select(F.col(id_col).alias("id"), F.col(score_col).alias("_s")),
         "id",
     )
-    id_type = df.schema[id_col].dataType
-    if isinstance(
-        id_type,
-        (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-         T.FloatType, T.DoubleType, T.DecimalType),
-    ):
-        # numeric ids: single-pass argmax, min-id tie-break via negation
-        reps = scored.groupBy("component").agg(
-            F.max_by("id", F.struct(F.col("_s"), -F.col("id"))).alias(id_col)
-        )
-    else:
-        # type-agnostic path (ADVICE r6: unary minus on a string id
-        # casts to NULL under ANSI-off, making the documented
-        # deterministic tie-break silently arbitrary): max score per
-        # component, then min id among max-score members — two partial
-        # aggregations over the tiny pair-derived map
-        smax = scored.groupBy("component").agg(F.max("_s").alias("_smax"))
-        reps = (
-            scored.join(smax, "component")
-            .filter(F.col("_s") == F.col("_smax"))
-            .groupBy("component")
-            .agg(F.min("id").alias(id_col))
-        )
-    losers = scored.join(
-        reps.select(F.col(id_col).alias("id")), "id", "left_anti"
-    ).select(F.col("id").alias(id_col))
+    w = W.partitionBy("component").orderBy(F.col("_s").desc_nulls_last(), "id")
+    reps = (
+        scored.withColumn("_r", F.row_number().over(w))
+        .filter(F.col("_r") == 1)
+        .select("id")
+    )
+    losers = scored.join(reps, "id", "left_anti").select(F.col("id").alias(id_col))
     out = df.join(losers, id_col, "left_anti")
     comp_map = comp.select(F.col("id").alias(id_col), "component")
     return out.join(comp_map, id_col, "left").withColumn(

@@ -20,8 +20,14 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from .lineage import truncate_lineage
 from pyspark.sql import types as T
+
+from .dedup import (
+    _bucket_pairs,
+    _cap_buckets,
+    _ensure_parallelism,
+    _finish_near_dup,
+)
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -116,16 +122,6 @@ def _lsh_buckets_udf(n_planes: int, dim: int, n_tables: int):
         return pd.Series(list(B))
 
     return F.pandas_udf(fn, T.ArrayType(T.LongType()))
-
-
-def _ensure_parallelism(df: DataFrame) -> DataFrame:
-    """See dedup._ensure_parallelism: one-file parquet inputs serialize
-    the bucket/cosine UDFs on a single core; repartition small inputs
-    up to the default parallelism (no-op on real datasets)."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < min(target, 8):
-        return df.repartition(target)
-    return df
 
 
 def lsh_bucket(vec: Column, n_planes: int, dim: int) -> Column:
@@ -241,24 +237,19 @@ def embedding_near_dup(
     NOTE: this operator is EAGER at call time even with ``eager=False``:
     the candidate stage runs immediately (to count candidate ids and, on
     the gather path, build the broadcast matrix). ``eager=True``
-    additionally checkpoints the final result and records the
-    dropped-bucket count as ``out._lsh_dropped_buckets``.
+    additionally checkpoints the final result.
 
     ``max_bucket_size`` is the same skew guard as minhash_lsh (a hot
-    bucket of m vectors otherwise costs m² candidates); set ``None`` to
-    disable.
+    bucket of m vectors otherwise costs m² candidates), with the same
+    audit frame ``out._dropped_buckets``; set ``None`` to disable.
     """
-    from .dedup import _cap_buckets, _unpersist_on_gc  # noqa: PLC0415
-
     df = _ensure_parallelism(df)
     buckets = _lsh_buckets_udf(n_planes, dim, n_tables)(F.col(vec_col))
     banded = df.select(
         F.col(id_col).alias("id"),
         F.posexplode(buckets).alias("tbl", "bk"),
     )
-    dropped = None
-    if max_bucket_size is not None:
-        banded, dropped = _cap_buckets(banded, ["tbl", "bk"], max_bucket_size)
+    banded, dropped = _cap_buckets(banded, ["tbl", "bk"], max_bucket_size)
     # Choose the verify strategy from BUCKET OCCUPANCY, not from a
     # materialized candidate join: est = Σ C(size, 2) over the (capped)
     # buckets upper-bounds the candidate pair volume and IS the cost of
@@ -282,20 +273,9 @@ def embedding_near_dup(
     cand = None
     n_ids = 0
     if use_gather:
-        a2, b2 = banded.alias("a"), banded.alias("b")
-        cand = (
-            a2.join(
-                b2,
-                (F.col("a.tbl") == F.col("b.tbl"))
-                & (F.col("a.bk") == F.col("b.bk"))
-                & (F.col("a.id") < F.col("b.id")),
-            )
-            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-            .dropDuplicates(["id_a", "id_b"])
-        )
         # cand is read 3× (the id union's two sides + the verify) and is
         # tiny (two longs per pair) — cache it so the LSH stage runs once.
-        cand = cand.persist()
+        cand = _bucket_pairs(banded, ["tbl", "bk"]).select("id_a", "id_b").persist()
         ids = (
             cand.select(F.col("id_a").alias("_cid"))
             .union(cand.select(F.col("id_b").alias("_cid")))
@@ -422,29 +402,9 @@ def embedding_near_dup(
             .filter(F.col("id_a") != F.col("id_b"))
             .dropDuplicates(["id_a", "id_b"])
         )
-    if eager:
-        res = truncate_lineage(out, reliable=reliable_checkpoint)
-        res._lsh_dropped_buckets = dropped.count() if dropped is not None else 0
-        res._verify_strategy = "gather" if bc is not None else "distributed"
-        if cand is not None:
-            cand.unpersist()
-        if bc is not None:
-            bc.unpersist()
-        return res
-    out._verify_strategy = "gather" if bc is not None else "distributed"
-    if cand is not None:
-        _unpersist_on_gc(out, cand)
-    if bc is not None:
-        import weakref  # noqa: PLC0415
-
-        def _free_bc(b=bc):
-            try:
-                b.unpersist()
-            except Exception:  # session may already be stopped  # noqa: BLE001
-                pass
-
-        weakref.finalize(out, _free_bc)
-    return out
+    res = _finish_near_dup(out, dropped, [cand, bc], eager, reliable_checkpoint)
+    res._verify_strategy = "gather" if bc is not None else "distributed"
+    return res
 
 
 # ---------------------------------------------------------------------------

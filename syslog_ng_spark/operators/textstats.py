@@ -35,15 +35,21 @@ def bpe_ish_token_count(c: Column) -> Column:
     return F.size(pieces)
 
 
+def _tokens_or_empty(c: Column) -> Column:
+    """``tokens`` with NULL text as no tokens: an aggregate over a NULL
+    array is NULL, which would skip the finish lambda's defaults."""
+    return F.coalesce(tokens(c), F.array().cast("array<string>"))
+
+
 def stopword_ratio(c: Column, lang: str = "en") -> Column:
     """Single-pass formulation: HOF lambdas have no codegen CSE, so the
     old ``size(filter(toks))/size(toks)`` re-evaluated the tokenizer
     regex per reference; one ``aggregate`` with a finish lambda
     tokenizes exactly once per row (same values: count of stopword
-    tokens over token count, 0.0 for token-less text)."""
+    tokens over token count, 0.0 for token-less or NULL text)."""
     sw = F.array(*[F.lit(w) for w in _STOPWORDS[lang]])
     return F.aggregate(
-        tokens(c),
+        _tokens_or_empty(c),
         F.struct(F.lit(0).alias("sw"), F.lit(0).alias("n")),
         lambda acc, t: F.struct(
             (acc["sw"] + F.when(F.array_contains(sw, t), 1).otherwise(0)).alias("sw"),
@@ -55,7 +61,7 @@ def stopword_ratio(c: Column, lang: str = "en") -> Column:
 
 def lang_id(c: Column) -> Column:
     """Stopword-vote language guess across the built-in sets; 'und' when
-    nothing votes (short/non-text input).
+    nothing votes (short/non-text/NULL input).
 
     Single aggregate pass: all four languages' votes accumulate in one
     struct over one tokenization, and the argmax chain (later language
@@ -87,7 +93,7 @@ def lang_id(c: Column) -> Column:
             cur = F.greatest(cur, acc[lang])
         return out
 
-    return F.aggregate(tokens(c), init, merge, finish)
+    return F.aggregate(_tokens_or_empty(c), init, merge, finish)
 
 
 def quality_score(c: Column, lang: str = "en") -> Column:

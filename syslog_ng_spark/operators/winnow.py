@@ -50,7 +50,13 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import _cap_buckets, _ensure_parallelism, _norm_text
+from .dedup import (
+    _bucket_pairs,
+    _cap_buckets,
+    _ensure_parallelism,
+    _finish_near_dup,
+    _norm_text,
+)
 
 
 def _grams(c: Column, k: int) -> Column:
@@ -169,54 +175,38 @@ def winnow_pairs(
     recall is 1 for every pair above any threshold > 0 — the only
     approximation is the LSH skew cap (``max_bucket_size``, same
     non-silent audit contract as minhash_lsh: oversized buckets are
-    dropped; pass None to disable).
+    dropped and recorded as the frame ``out._dropped_buckets``; pass
+    None to disable).
 
     Shuffle budget: fingerprint explode (no exchange, pandas engine) →
-    one exchange for per-doc counts, one for the bucket self-join, one
-    for the pair aggregation, two id-keyed joins for the counts. The
-    self-join ships only (id, fp) rows — text never crosses the wire.
+    one exchange for per-doc counts, one for the bucket self-join
+    (``dedup._bucket_pairs``), one for the pair aggregation, two
+    id-keyed joins for the counts. The self-join ships only (id, fp)
+    rows — text never crosses the wire.
     """
     fps = winnow_fingerprints(df, text_col, id_col, k, window, engine)
     fps = fps.persist()
     counts = fps.groupBy(id_col).agg(F.count(F.lit(1)).alias("_nfp"))
-    capped = fps
-    _dropped = None
-    if max_bucket_size is not None:
-        capped, _dropped = _cap_buckets(fps, ["fp"], max_bucket_size)
-    a = capped.select(F.col(id_col).alias("id_a"), "fp")
-    b = capped.select(F.col(id_col).alias("id_b"), "fp")
-    shared = (
-        a.join(b, "fp")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("_shared"))
-    )
+    capped, dropped = _cap_buckets(fps, ["fp"], max_bucket_size)
+    shared = _bucket_pairs(capped.select(F.col(id_col).alias("id"), "fp"), ["fp"])
     ca = counts.select(F.col(id_col).alias("id_a"), F.col("_nfp").alias("_na"))
     cb = counts.select(F.col(id_col).alias("id_b"), F.col("_nfp").alias("_nb"))
+    # n_shared comes from the CAPPED set while _na/_nb come from the full
+    # per-doc fingerprint counts, so for a pair whose shared fingerprints
+    # partly sit in dropped buckets the reported jaccard is a LOWER BOUND:
+    # capping can under-score a pair, never promote it above threshold.
     out = (
         shared.join(ca, "id_a")
         .join(cb, "id_b")
         .withColumn(
             "jaccard",
-            F.col("_shared")
-            / (F.col("_na") + F.col("_nb") - F.col("_shared")).cast("double"),
+            F.col("n_shared")
+            / (F.col("_na") + F.col("_nb") - F.col("n_shared")).cast("double"),
         )
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    from .dedup import _unpersist_on_gc  # noqa: PLC0415
-
-    _unpersist_on_gc(out, fps)
-    # non-silent cap audit (same contract as minhash_lsh): the dropped-
-    # bucket frame — one row per capped fingerprint bucket with its
-    # size — rides on the result for callers to count/log/route. NOTE:
-    # _shared counts come from the CAPPED set while _na/_nb come from
-    # the full per-doc fingerprint counts, so for a pair whose shared
-    # fingerprints partly sit in dropped buckets the reported jaccard
-    # is a LOWER BOUND (never an overestimate) — a pair can only be
-    # under-scored by capping, never promoted above threshold.
-    out._capped_buckets = _dropped
-    return out
+    return _finish_near_dup(out, dropped, [fps])
 
 
 def winnow_decontaminate(

@@ -48,9 +48,9 @@ _RESULT = {
 
 _DRIVER = r"""
 import json, os, sys, types
-tmpdir, repo = sys.argv[1], sys.argv[2]
+tmpdir, repo, name = sys.argv[1], sys.argv[2], sys.argv[3]
 sys.path.insert(0, repo)
-bench_path = os.path.join(tmpdir, "bench.py")
+bench_path = os.path.join(tmpdir, name)
 mod = types.ModuleType("__main__")
 mod.__file__ = bench_path
 mod.__name__ = "bench_under_test"  # keep the __main__ guard from running main()
@@ -64,8 +64,10 @@ print("RENDER_OK")
 """
 
 
-def _run(tmp_path, with_shim: bool) -> subprocess.CompletedProcess:
-    shutil.copy(os.path.join(REPO, "bench.py"), tmp_path / "bench.py")
+def _run(
+    tmp_path, with_shim: bool, name: str = "bench.py"
+) -> subprocess.CompletedProcess:
+    shutil.copy(os.path.join(REPO, "bench.py"), tmp_path / name)
     # a good previous round plus the poisoned driver artifact
     (tmp_path / "BENCH_r05.json").write_text(
         json.dumps({"parsed": {"queries": {"flagship_route": 2.0}, "sf": 0.1}})
@@ -76,7 +78,7 @@ def _run(tmp_path, with_shim: bool) -> subprocess.CompletedProcess:
         "import syslog_ng_spark  # installs the write_bench_md hardening shim", "pass"
     )
     return subprocess.run(
-        [sys.executable, "-c", driver, str(tmp_path), REPO],
+        [sys.executable, "-c", driver, str(tmp_path), REPO, name],
         capture_output=True,
         text=True,
         timeout=120,
@@ -94,7 +96,18 @@ def test_shim_makes_render_survive_null_parsed_artifact(tmp_path):
     proc = _run(tmp_path, with_shim=True)
     assert proc.returncode == 0, proc.stderr
     assert "RENDER_OK" in proc.stdout
+    # the fallback is not silent
+    assert "write_bench_md raised" in proc.stderr
     md = (tmp_path / "BENCH.md").read_text()
     # the comparison section still renders from the GOOD previous artifact
     assert "BENCH_r05.json" in md
     assert "flagship_route" in md
+
+
+def test_shim_ignores_other_bench_scripts(tmp_path):
+    """Only a ``__main__`` named exactly bench.py is hardened: the same
+    file run as my_bench.py keeps its own failure."""
+    proc = _run(tmp_path, with_shim=True, name="my_bench.py")
+    assert proc.returncode != 0
+    assert "AttributeError" in proc.stderr
+    assert "write_bench_md raised" not in proc.stderr

@@ -119,18 +119,50 @@ def test_simhash_pairs_chunk_width_param(docs):
     assert (1, 4) in pairs  # identical fingerprints, hamming 0
 
 
-def test_minhash_eager_reports_dropped_buckets(spark):
-    """The cap is not silent: eager mode records how many buckets were
-    skew-dropped so callers can route boilerplate clusters to exact_dedup."""
-    hot = [(i, "same boilerplate words every single time") for i in range(500)]
-    df = spark.createDataFrame(hot, "doc_id long, text string")
-    out = D.minhash_lsh(df, threshold=0.5, max_bucket_size=100, eager=True)
-    assert out.count() == 0
-    assert out._lsh_dropped_buckets >= 16  # every band's single bucket dropped
-    # uncapped eager run reports zero drops
-    small = spark.createDataFrame(hot[:5], "doc_id long, text string")
-    out2 = D.minhash_lsh(small, threshold=0.5, max_bucket_size=None, eager=True)
-    assert out2._lsh_dropped_buckets == 0
+def _near_dup_family(spark, family, eager, cap):
+    """One capped-or-uncapped run of a near-dup family over a hot
+    cluster: 30 identical docs (or vectors) share every bucket."""
+    if family == "embedding":
+        from syslog_ng_spark.operators.similarity import embedding_near_dup
+
+        vecs = spark.createDataFrame(
+            [(i, [1.0] * 8) for i in range(30)], "vec_id long, embedding array<double>"
+        )
+        return embedding_near_dup(
+            vecs, threshold=0.99, dim=8, n_planes=4, n_tables=4,
+            max_bucket_size=cap, eager=eager,
+        )
+    docs = spark.createDataFrame(
+        [(i, "same boilerplate words every single time") for i in range(30)],
+        "doc_id long, text string",
+    )
+    if family == "winnow":
+        from syslog_ng_spark.operators.winnow import winnow_pairs
+
+        return winnow_pairs(docs, threshold=0.1, max_bucket_size=cap)
+    fn = D.minhash_lsh if family == "minhash" else D.simhash_near_dup
+    return fn(docs, threshold=0.5, max_bucket_size=cap, eager=eager)
+
+
+@pytest.mark.parametrize(
+    "family, eager",
+    [
+        ("minhash", False), ("minhash", True),
+        ("simhash", False), ("simhash", True),
+        ("winnow", False),  # winnow_pairs is always lazy
+        ("embedding", False), ("embedding", True),
+    ],
+    ids=lambda v: {False: "lazy", True: "eager"}.get(v, v),
+)
+def test_near_dup_cap_audit(spark, family, eager):
+    """The skew cap is never silent: every family records the dropped
+    buckets as the same ``_dropped_buckets`` frame (each bucket above
+    the cap, with its size), eager or lazy; uncapped runs record None."""
+    capped = _near_dup_family(spark, family, eager, cap=10)
+    dropped = capped._dropped_buckets.collect()
+    assert dropped
+    assert all(r.bucket_size > 10 for r in dropped)
+    assert _near_dup_family(spark, family, eager, cap=None)._dropped_buckets is None
 
 
 def _synthetic_corpus(spark, n_docs: int, n_dups: int):
@@ -168,7 +200,7 @@ def test_simhash_block_chunks_survive_corpus_scale(spark):
     # recall collapses (a stray pair can luck into a rare low-occupancy
     # bucket — fingerprint bits are biased on short docs)
     assert len(planted & naive_pairs) <= 3
-    assert naive._lsh_dropped_buckets >= 8 * 200  # ...audited as dropped
+    assert naive._dropped_buckets.count() >= 8 * 200  # ...audited as dropped
 
     # DEFAULT arguments (block_chunks='auto') must measure the
     # dispersion, land on the deep keying (d=3 at this cap) and give
@@ -177,7 +209,7 @@ def test_simhash_block_chunks_survive_corpus_scale(spark):
     blocked = D.simhash_near_dup(df, threshold=0.5, max_bucket_size=50, eager=True)
     got = {(r.id_a, r.id_b) for r in blocked.collect()}
     assert planted <= got                     # 100% recall on planted dups
-    assert blocked._lsh_dropped_buckets == 0  # keyspace no longer saturates
+    assert blocked._dropped_buckets.count() == 0  # keyspace no longer saturates
 
 
 def test_connected_components_exact(spark):

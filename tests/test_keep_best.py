@@ -1,5 +1,6 @@
 """dedup_keep_best: score-policy representative selection per cluster."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from syslog_ng_spark.operators.dedup import dedup_keep_best
@@ -77,3 +78,21 @@ def test_keep_best_string_ids_deterministic_tiebreak(spark):
            dedup_keep_best(docs, pairs, score_col="score").collect()}
     # all three tie at score 5 -> min id 'a' wins; 'z' is a singleton
     assert out == {("a", "a"), ("z", "z")}
+
+
+@pytest.mark.parametrize(
+    "id_type, ids",
+    [("string", ["a", "b", "z"]), ("long", [1, 2, 26])],
+    ids=["string", "long"],
+)
+def test_keep_best_all_null_score_cluster(spark, id_type, ids):
+    """A cluster whose every score is NULL still keeps one member (the
+    min id), for string and numeric ids alike."""
+    a, b, z = ids
+    docs = spark.createDataFrame(
+        [(a, None), (b, None), (z, None)], f"doc_id {id_type}, score int"
+    )
+    pairs = spark.createDataFrame([(a, b)], f"id_a {id_type}, id_b {id_type}")
+    out = {(r.doc_id, r.component) for r in
+           dedup_keep_best(docs, pairs, score_col="score").collect()}
+    assert out == {(a, a), (z, z)}

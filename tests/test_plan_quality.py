@@ -103,11 +103,12 @@ def test_salted_agg_is_two_phase(spark, transcripts_df):
 
 
 def test_near_dup_verify_has_no_cartesian(spark):
-    """minhash/simhash/embedding near-dup plans: candidates come from
-    equi-joins (SortMerge/Hash), never a cartesian/broadcast-nested-loop
-    product of the corpus with itself."""
+    """minhash/simhash/winnow/embedding near-dup plans: candidates come
+    from equi-joins (SortMerge/Hash), never a cartesian/broadcast-nested-
+    loop product of the corpus with itself."""
     from syslog_ng_spark.operators.dedup import minhash_lsh, simhash_near_dup
     from syslog_ng_spark.operators.similarity import embedding_near_dup
+    from syslog_ng_spark.operators.winnow import winnow_pairs
 
     docs = spark.createDataFrame(
         [(i, f"alpha beta gamma delta {i} epsilon zeta") for i in range(30)],
@@ -120,6 +121,7 @@ def test_near_dup_verify_has_no_cartesian(spark):
     for q in (
         minhash_lsh(docs, threshold=0.5),
         simhash_near_dup(docs, threshold=0.5),
+        winnow_pairs(docs, threshold=0.5),
         embedding_near_dup(emb, threshold=0.9, n_planes=4, n_tables=4),
     ):
         plan = _plan(q)

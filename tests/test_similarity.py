@@ -110,7 +110,7 @@ def test_embedding_near_dup_recall_vs_brute_force(spark, emb):
 def test_embedding_hot_bucket_cap_and_accounting(spark):
     """One degenerate bucket (300 identical vectors land in the same LSH
     bucket of every table) must not produce a quadratic pair set: the
-    skew cap drops those buckets (audited via _lsh_dropped_buckets), and
+    skew cap drops those buckets (audited via _dropped_buckets), and
     pairs outside the hot cluster are still found."""
     from syslog_ng_spark.operators.similarity import embedding_near_dup
 
@@ -128,7 +128,7 @@ def test_embedding_hot_bucket_cap_and_accounting(spark):
     pairs = {(r.id_a, r.id_b) for r in out.collect()}
     assert (9001, 9002) in pairs
     assert not any(a < 300 and b < 300 for a, b in pairs)
-    assert out._lsh_dropped_buckets >= 4  # the hot bucket, in every table
+    assert out._dropped_buckets.count() >= 4  # the hot bucket, in every table
 
     # uncapped: the hot cluster verifies quadratically (correct, but the
     # cap is what keeps this bounded at corpus scale)

@@ -22,11 +22,19 @@ def test_lang_id(spark):
             ("der Hund ist nicht auf der Couch und das ist gut",),
             ("le chat est dans la maison et il est content",),
             ("xyzzy plugh 12345",),
+            (None,),
         ],
         "text string",
     )
     out = [r.lang for r in df.select(TS.lang_id(F.col("text")).alias("lang")).collect()]
-    assert out == ["en", "de", "fr", "und"]
+    assert out == ["en", "de", "fr", "und", "und"]
+
+
+def test_stopword_ratio(spark):
+    # NULL text has no tokens: 0.0, like empty text
+    df = spark.createDataFrame([("the cat is here",), ("",), (None,)], "text string")
+    out = [r.sw for r in df.select(TS.stopword_ratio(F.col("text")).alias("sw")).collect()]
+    assert out == [0.5, 0.0, 0.0]
 
 
 def test_quality_score_bounds(spark, transcripts_df):

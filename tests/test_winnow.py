@@ -198,25 +198,3 @@ def test_winnow_decontaminate_broadcasts_benchmark(spark):
         .toString()
     )
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoop" in plan
-
-
-def test_winnow_pairs_surfaces_cap_audit(spark):
-    """ADVICE r6: the skew-cap audit frame must ride on the result
-    (same non-silent contract as minhash_lsh), and a pair whose shared
-    fingerprints sit in capped buckets is under-scored, never promoted."""
-    from syslog_ng_spark.operators.winnow import winnow_pairs
-
-    base = "alpha beta gamma delta epsilon zeta eta theta"
-    docs = spark.createDataFrame(
-        [(i, base) for i in range(10)] + [(100, "unique words only here now maybe")],
-        "doc_id long, text string",
-    )
-    out = winnow_pairs(docs, max_bucket_size=5, threshold=0.1)
-    audit = out._capped_buckets
-    assert audit is not None
-    dropped = audit.collect()
-    assert len(dropped) >= 1  # the shared-boilerplate buckets got capped
-    assert all(r.bucket_size > 5 for r in dropped)
-    # uncapped: audit frame is None
-    out2 = winnow_pairs(docs, max_bucket_size=None, threshold=0.1)
-    assert out2._capped_buckets is None
