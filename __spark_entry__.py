@@ -25,34 +25,9 @@ def _ensure_conf(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
-def _table_bytes(path: str) -> int:
-    import os
-
-    if os.path.isdir(path):
-        return sum(
-            os.path.getsize(os.path.join(r, f))
-            for r, _d, fs in os.walk(path)
-            for f in fs
-        )
-    try:
-        return os.path.getsize(path)
-    except OSError:
-        return 1 << 40  # unknown (remote store): treat as big, no repartition
-
-
-_TABLE_BYTES_CACHE: dict[str, int] = {}
-
-
 def _t(spark: SparkSession, sf_dir: str, name: str, wide: bool = False) -> DataFrame:
-    """Read a gate table. ``wide=True`` requests full scan parallelism
-    for queries whose per-row work dominates (optimization guide §2): a
-    small single-file parquet is one row group = ONE scan partition,
-    which serializes every per-row parser/regex/UDF stage before the
-    first exchange on a single core (measured: the parse-query family
-    ran 1-task stages, e.g. scl_cisco 3.2 s single-core vs 0.9 s wide).
-    Below 256 MB (≤2 natural 128 MB splits) the round-robin repartition
-    costs a sub-second shuffle of the small table; larger tables keep
-    their natural splits, so the 100 TB path never pays it.
+    """Read a gate table. ``wide=True`` applies the library's scan-
+    parallelism rule (``dedup._ensure_parallelism``) to the scan.
 
     ``wide`` stays opt-in per query because the exchange is a net LOSS
     for cheap column chains and for tables feeding a broadcast subtree
@@ -64,15 +39,11 @@ def _t(spark: SparkSession, sf_dir: str, name: str, wide: bool = False) -> DataF
     query's result is pinned by an explicit orderBy/aggregate, not
     partition layout."""
     _ensure_conf(spark)
-    path = f"{sf_dir}/{name}.parquet"
-    df = spark.read.parquet(path)
+    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if wide:
-        bytes_ = _TABLE_BYTES_CACHE.get(path)
-        if bytes_ is None:
-            bytes_ = _table_bytes(path)
-            _TABLE_BYTES_CACHE[path] = bytes_
-        if bytes_ < 256 * 1024 * 1024:
-            df = df.repartition(spark.sparkContext.defaultParallelism)
+        from syslog_ng_spark.operators.dedup import _ensure_parallelism
+
+        df = _ensure_parallelism(df)
     return df
 
 

@@ -178,22 +178,37 @@ def minhash_signature(c: Column, k: int = 64) -> Column:
 
 
 def _doc_batches(lists, max_flat: int = 200_000):
-    """Group per-doc hash lists into chunks whose TOTAL element count
+    """Flatten per-doc hash lists in chunks whose TOTAL element count
     stays under ``max_flat`` — the cross-doc vectorization below builds a
-    (total × k) intermediate, and bounding total bounds peak memory."""
+    (total × k) intermediate, and bounding total bounds peak memory.
+
+    Yields ``(idx, flat, lens, starts)`` over each chunk's NON-EMPTY
+    docs: their row indices, their hashes concatenated as uint64, their
+    lengths, and their offsets into ``flat`` (the ``reduceat``
+    boundaries). Empty and NULL docs appear in no chunk."""
     import numpy as np  # noqa: PLC0415
+
+    def flatten(batch):
+        lens = np.array([len(lst) for _i, lst in batch])
+        flat = np.concatenate(
+            [np.asarray(lst, dtype=np.int64) for _i, lst in batch]
+        ).astype(np.uint64)
+        starts = np.concatenate([[0], np.cumsum(lens)[:-1]])
+        return [i for i, _lst in batch], flat, lens, starts
 
     batch, total = [], 0
     for i, lst in enumerate(lists):
         # Arrow hands list columns over as numpy arrays — no truthiness
         n = 0 if lst is None else len(lst)
+        if not n:
+            continue
         if batch and total + n > max_flat:
-            yield batch
+            yield flatten(batch)
             batch, total = [], 0
-        batch.append((i, lst, n))
+        batch.append((i, lst))
         total += n
     if batch:
-        yield batch
+        yield flatten(batch)
 
 
 @F.pandas_udf(T.ArrayType(T.LongType()))
@@ -209,20 +224,11 @@ def _minhash_from_hashes(hashes: pd.Series, k_ser: pd.Series) -> pd.Series:
     A = np.array(_MH_A[:k], dtype=np.int64).astype(np.uint64)
     B = np.array(_MH_B[:k], dtype=np.int64).astype(np.uint64)
 
-    lists = hashes.to_list()
-    out = [None] * len(lists)
-    for batch in _doc_batches(lists):
-        nonempty = [(i, lst, n) for i, lst, n in batch if n]
-        if not nonempty:
-            continue
-        flat = np.concatenate(
-            [np.asarray(lst, dtype=np.int64) for _i, lst, _n in nonempty]
-        ).astype(np.uint64)
-        lens = np.array([n for _i, _lst, n in nonempty])
-        starts = np.concatenate([[0], np.cumsum(lens)[:-1]])
+    out = [None] * len(hashes)
+    for idx, flat, _lens, starts in _doc_batches(hashes.to_list()):
         M = flat[:, None] * A + B  # (total × k), wrapping uint64
         mins = np.minimum.reduceat(M, starts, axis=0).astype(np.int64)
-        for j, (i, _lst, _n) in enumerate(nonempty):
+        for j, i in enumerate(idx):
             out[i] = mins[j].tolist()
     return pd.Series(out)
 
@@ -411,21 +417,12 @@ def _simhash64_from_hashes(hashes: pd.Series) -> pd.Series:
     shifts = np.arange(64, dtype=np.uint64)
     weights = (np.uint64(1) << shifts)
 
-    lists = hashes.to_list()
-    out = np.zeros(len(lists), dtype=np.int64)
-    for batch in _doc_batches(lists):
-        nonempty = [(i, lst, n) for i, lst, n in batch if n]
-        if not nonempty:
-            continue
-        flat = np.concatenate(
-            [np.asarray(lst, dtype=np.int64) for _i, lst, _n in nonempty]
-        ).astype(np.uint64)
-        lens = np.array([n for _i, _lst, n in nonempty])
-        starts = np.concatenate([[0], np.cumsum(lens)[:-1]])
+    out = np.zeros(len(hashes), dtype=np.int64)
+    for idx, flat, lens, starts in _doc_batches(hashes.to_list()):
         bits = ((flat[:, None] >> shifts) & np.uint64(1))  # (total × 64)
         ones = np.add.reduceat(bits, starts, axis=0)  # (docs × 64)
         fp = ((ones * 2 > lens[:, None]) * weights).sum(axis=1).astype(np.int64)
-        for j, (i, _lst, _n) in enumerate(nonempty):
+        for j, i in enumerate(idx):
             out[i] = fp[j]
     return pd.Series(out)
 

@@ -170,39 +170,27 @@ def syslog_parser(
     SEP = "\x1e"
     t = F.col(text_col)
     p = prefix
-    if "no-parse" in flags:
-        # LP_NOPARSE: framing only — everything is the message
+    if "no-parse" in flags or "no-header" in flags:
+        if "no-parse" in flags:
+            # LP_NOPARSE: framing only — everything is the message
+            pri, msg = F.lit(default_pri), t
+        else:
+            # LP_NO_HEADER (msg-format.h): the PRI is parsed, nothing
+            # else — everything after <PRI> is the message
+            pri0 = F.regexp_extract(t, r"^<(\d{1,3})>", 1)
+            pri = F.when(
+                _nullif_empty(pri0).isNotNull(), pri0.cast("int")
+            ).otherwise(F.lit(default_pri))
+            msg = F.regexp_replace(t, r"^<\d{1,3}>", "")
         return (
-            df.withColumn(p + "pri", F.lit(default_pri))
+            df.withColumn(p + "pri", pri)
             .withColumn(p + "syslog_ts", F.lit(None).cast("timestamp"))
             .withColumn(p + "host", F.lit(None).cast("string"))
             .withColumn(p + "program", F.lit(None).cast("string"))
             .withColumn(p + "pid", F.lit(None).cast("int"))
             .withColumn(p + "msgid", F.lit(None).cast("string"))
             .withColumn(p + "sdata", F.lit(None).cast("map<string,string>"))
-            .withColumn(p + "msg", t)
-            .withColumn(p + "syslog_format", F.lit(None).cast("string"))
-            .withColumn(p + "syslog_tags", F.array().cast("array<string>"))
-            .withColumn(p + "syslog_matched", F.lit(True))
-        )
-    if "no-header" in flags:
-        # LP_NO_HEADER (msg-format.h): the PRI is parsed, nothing else —
-        # everything after <PRI> is the message
-        pri0 = F.regexp_extract(t, r"^<(\d{1,3})>", 1)
-        return (
-            df.withColumn(
-                p + "pri",
-                F.when(_nullif_empty(pri0).isNotNull(), pri0.cast("int")).otherwise(
-                    F.lit(default_pri)
-                ),
-            )
-            .withColumn(p + "syslog_ts", F.lit(None).cast("timestamp"))
-            .withColumn(p + "host", F.lit(None).cast("string"))
-            .withColumn(p + "program", F.lit(None).cast("string"))
-            .withColumn(p + "pid", F.lit(None).cast("int"))
-            .withColumn(p + "msgid", F.lit(None).cast("string"))
-            .withColumn(p + "sdata", F.lit(None).cast("map<string,string>"))
-            .withColumn(p + "msg", F.regexp_replace(t, r"^<\d{1,3}>", ""))
+            .withColumn(p + "msg", msg)
             .withColumn(p + "syslog_format", F.lit(None).cast("string"))
             .withColumn(p + "syslog_tags", F.array().cast("array<string>"))
             .withColumn(p + "syslog_matched", F.lit(True))
@@ -698,7 +686,6 @@ def kv_parser(
     pair_separator: str = ", ",
     prefix: str = "",
     target: str = "kv",
-    engine: str = "arrow",
 ) -> DataFrame:
     """Extract ``k=v`` pairs into a map column — kv-scanner semantics
     (lib/scanner/kv-scanner/kv-scanner.c, edge cases pinned against its
@@ -708,55 +695,32 @@ def kv_parser(
     overwrites (last wins). Adds ``<target>`` map<string,string> +
     ``<target>_matched``.
 
-    ``engine='arrow'`` (default): one vectorized Arrow UDF with a
-    precompiled regex — measured 3.4× faster than the JVM path on this
-    workload, because ``regexp_extract_all`` pays two full scans plus
-    heavy per-match string churn (see BENCH.md notes).
-    ``engine='jvm'``: pure column expressions (regexp_extract_all ×2),
-    zero Python — the fast-path subset: same pair grammar, but quoted
-    values are only stripped, not C-string unescaped.
+    One vectorized Arrow UDF with a precompiled regex — measured 3.4×
+    faster than a pure-column ``regexp_extract_all`` formulation, which
+    pays two full scans plus heavy per-match string churn (PLANS.md
+    item 2).
     """
-    pat = _kv_pattern(value_separator, pair_separator)
+    creg = _re.compile(_kv_pattern(value_separator, pair_separator))
     src = F.col(source) if isinstance(source, str) else source
 
-    if engine == "arrow":
-        creg = _re.compile(pat)
+    @F.pandas_udf(T.MapType(T.StringType(), T.StringType()))
+    def scan(s: pd.Series) -> pd.Series:
+        def one(t):
+            if t is None:
+                return None
+            out = {}
+            for k, v in creg.findall(t):
+                if v[:1] in ('"', "'") and v[-1:] == v[:1] and len(v) >= 2:
+                    v = _kv_unescape(v[1:-1])
+                else:
+                    v = v.rstrip(" ")
+                out[prefix + k] = v
+            return out
 
-        @F.pandas_udf(T.MapType(T.StringType(), T.StringType()))
-        def scan(s: pd.Series) -> pd.Series:
-            def one(t):
-                if t is None:
-                    return None
-                out = {}
-                for k, v in creg.findall(t):
-                    if v[:1] in ('"', "'") and v[-1:] == v[:1] and len(v) >= 2:
-                        v = _kv_unescape(v[1:-1])
-                    else:
-                        v = v.rstrip(" ")
-                    out[prefix + k] = v
-                return out
+        return s.map(one)
 
-            return s.map(one)
-
-        kv = scan(src)
-        return df.withColumn(target, kv).withColumn(
-            target + "_matched", F.size(F.col(target)) > 0
-        )
-
-    keys = F.regexp_extract_all(src, F.lit(pat), 1)
-    vals = F.regexp_extract_all(src, F.lit(pat), 2)
-    unquote = F.transform(
-        vals,
-        lambda v: F.when(
-            v.rlike(r"^\".*\"$") | v.rlike(r"^'.*'$"),
-            F.regexp_replace(F.substring(v, 2, (1 << 30)), r"[\"']$", ""),
-        ).otherwise(F.regexp_replace(v, " +$", "")),
-    )
-    if prefix:
-        keys = F.transform(keys, lambda k: F.concat(F.lit(prefix), k))
-    kv = F.map_from_arrays(keys, unquote)
-    return df.withColumn(target, kv).withColumn(
-        target + "_matched", F.size(keys) > 0
+    return df.withColumn(target, scan(src)).withColumn(
+        target + "_matched", F.size(F.col(target)) > 0
     )
 
 

@@ -22,17 +22,13 @@ ordering of documents by repetition is preserved; the formula is
 exactly reproducible in one SQL aggregate, which is what makes the
 gate oracle possible.
 
-Spark shape (100-TB-ready): every signal is DOCUMENT-LOCAL, so the
-default ``engine="arrow"`` computes all of them in ONE vectorized
-pandas-UDF pass — zero shuffles, zero joins, per-task memory bounded
-by one document's distinct-gram set. The alternative
-``engine="explode"`` is the pure-JVM formulation (explode → count-keyed
-groupBy → join back per n); it shuffles (doc_id, 8-byte gram hash,
-4-byte length) triples — small rows, but the shuffled row COUNT is the
-corpus token mass × len(ns), which at 100 TB is ~10^13 rows per n
-versus none at all for the arrow path. The two engines are
-identical-results tested (tests/test_repetition.py); the explode path
-remains both the cross-check and the fallback if Arrow is unavailable.
+Spark shape (100-TB-ready): every signal is DOCUMENT-LOCAL, so all of
+them come from ONE vectorized pandas-UDF pass — zero shuffles, zero
+joins, per-task memory bounded by one document's distinct-gram set. A
+pure-JVM explode → count-keyed groupBy → join-back formulation would
+shuffle the corpus token mass once per n (PLANS.md item 18). The
+independent checks are the Python reference in tests/test_repetition.py
+and the gate's DuckDB oracle.
 
 Reference framing: syslog-ng's closest analogue is grouping-by()'s
 context aggregates (modules/grouping-by) — per-key bag statistics —
@@ -49,9 +45,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from syslog_ng_spark.operators.decontaminate import word_ngrams
-
-# Mirrors the JVM tokenizer used by the explode engine and the DuckDB
+# Mirrors the JVM tokenizer (decontaminate.word_tokens) and the DuckDB
 # oracle: Java \s is the ASCII class [ \t\n\x0B\f\r] (NOT Unicode-aware
 # like Python's \s), so spell it out.
 _JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
@@ -64,7 +58,7 @@ def _doc_signals(
     all_ns: tuple[int, ...],
 ) -> list[float]:
     """All repetition fractions for one document, exactly mirroring the
-    explode-engine / DuckDB-oracle arithmetic (same tie-breaks, same
+    DuckDB-oracle arithmetic (same tie-breaks, same
     integer→double divisions)."""
     out = []
     if not text:
@@ -113,26 +107,16 @@ def _doc_signals(
 def repetition_stats(
     df: DataFrame,
     text_col: str = "text",
-    id_col: str = "doc_id",
     top_ns: tuple[int, ...] = (2, 3, 4),
     dup_ns: tuple[int, ...] = (5, 6, 7, 8, 9, 10),
-    engine: str = "arrow",
 ) -> DataFrame:
     """Annotate ``df`` with per-document repetition fractions.
 
     Adds ``dup_line_frac``, ``dup_line_char_frac``, and per-n
     ``top_{n}gram_char_frac`` / ``dup_{n}gram_char_frac`` columns
-    (doubles in [0, 1], 0.0 for empty/too-short documents).
-
-    ``engine="arrow"`` (default) is one zero-shuffle vectorized pass;
-    ``engine="explode"`` is the pure-JVM explode/groupBy/join
-    formulation (identical results, used as the cross-check).
+    (doubles in [0, 1], 0.0 for empty/too-short documents) in one
+    zero-shuffle vectorized pass.
     """
-    if engine == "explode":
-        return _stats_explode(df, text_col, id_col, top_ns, dup_ns)
-    if engine != "arrow":
-        raise ValueError(f"unknown engine {engine!r}")
-
     top_ns = tuple(top_ns)
     dup_ns = tuple(dup_ns)
     all_ns = tuple(sorted(set(top_ns) | set(dup_ns)))
@@ -154,108 +138,13 @@ def repetition_stats(
     return out.drop("_rep")
 
 
-def _stats_explode(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    top_ns: tuple[int, ...],
-    dup_ns: tuple[int, ...],
-) -> DataFrame:
-    text = F.col(text_col)
-    n_chars = F.length(text)
-
-    # --- line family: one explode + count-keyed aggregate ------------
-    lines = df.select(
-        id_col,
-        F.explode(
-            F.filter(F.split(text, r"\n"), lambda l: F.trim(l) != "")
-        ).alias("_line"),
-    )
-    line_counts = lines.groupBy(id_col, "_line").agg(F.count("*").alias("_c"))
-    line_stats = line_counts.groupBy(id_col).agg(
-        (
-            F.coalesce(F.sum(F.when(F.col("_c") > 1, F.col("_c"))), F.lit(0))
-            / F.sum("_c")
-        ).alias("dup_line_frac"),
-        (
-            F.coalesce(
-                F.sum(
-                    F.when(F.col("_c") > 1, F.col("_c") * F.length("_line"))
-                ),
-                F.lit(0),
-            )
-            / F.sum(F.col("_c") * F.length("_line"))
-        ).alias("dup_line_char_frac"),
-    )
-
-    # --- n-gram families: explode hashed grams, count, aggregate -----
-    def ngram_stats(n: int) -> DataFrame:
-        grams = df.select(
-            id_col,
-            F.explode(word_ngrams(text, n)).alias("_g"),
-        ).select(
-            id_col,
-            F.xxhash64("_g").alias("_gh"),
-            F.length("_g").alias("_gl"),
-        )
-        counts = grams.groupBy(id_col, "_gh", "_gl").agg(
-            F.count("*").alias("_c")
-        )
-        return counts.groupBy(id_col).agg(
-            F.max(F.struct("_c", "_gl")).alias(f"_top{n}"),
-            F.coalesce(
-                F.sum(F.when(F.col("_c") > 1, F.col("_c") * F.col("_gl"))),
-                F.lit(0),
-            ).alias(f"_dup{n}"),
-            F.sum(F.col("_c") * F.col("_gl")).alias(f"_tot{n}"),
-        )
-
-    out = df.join(line_stats, id_col, "left")
-    for n in sorted(set(top_ns) | set(dup_ns)):
-        out = out.join(ngram_stats(n), id_col, "left")
-
-    out = out.withColumn(
-        "dup_line_frac", F.coalesce("dup_line_frac", F.lit(0.0))
-    ).withColumn(
-        "dup_line_char_frac", F.coalesce("dup_line_char_frac", F.lit(0.0))
-    )
-    for n in top_ns:
-        top = F.col(f"_top{n}")
-        out = out.withColumn(
-            f"top_{n}gram_char_frac",
-            F.when(
-                top.isNotNull() & (n_chars > 0),
-                F.least(
-                    F.lit(1.0), top["_c"] * top["_gl"] / n_chars
-                ),
-            ).otherwise(F.lit(0.0)),
-        )
-    for n in dup_ns:
-        out = out.withColumn(
-            f"dup_{n}gram_char_frac",
-            F.when(
-                F.col(f"_tot{n}").isNotNull() & (F.col(f"_tot{n}") > 0),
-                F.col(f"_dup{n}") / F.col(f"_tot{n}"),
-            ).otherwise(F.lit(0.0)),
-        )
-    all_ns = sorted(set(top_ns) | set(dup_ns))
-    drop = (
-        [f"_top{n}" for n in all_ns]
-        + [f"_dup{n}" for n in all_ns]
-        + [f"_tot{n}" for n in all_ns]
-    )
-    return out.drop(*drop)
-
-
 def gopher_repetition_filter(
     df: DataFrame,
     text_col: str = "text",
-    id_col: str = "doc_id",
     max_dup_line_frac: float = 0.30,
     max_dup_line_char_frac: float = 0.20,
     max_top_ngram_char_frac: dict[int, float] | None = None,
     max_dup_ngram_char_frac: dict[int, float] | None = None,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Drop documents exceeding the paper's repetition thresholds
     (defaults: Rae et al. 2021 table A1). Pass dicts {n: threshold} to
@@ -265,8 +154,8 @@ def gopher_repetition_filter(
         5: 0.15, 6: 0.14, 7: 0.13, 8: 0.12, 9: 0.11, 10: 0.10
     }
     stats = repetition_stats(
-        df, text_col=text_col, id_col=id_col,
-        top_ns=tuple(top), dup_ns=tuple(dup), engine=engine,
+        df, text_col=text_col,
+        top_ns=tuple(top), dup_ns=tuple(dup),
     )
     conds = [
         F.col("dup_line_frac") <= max_dup_line_frac,

@@ -165,7 +165,6 @@ def winnow_pairs(
     window: int = 4,
     threshold: float = 0.5,
     max_bucket_size: int | None = 1000,
-    engine: str = "pandas",
 ) -> DataFrame:
     """MOSS-style near-dup pairs: documents scored by Jaccard over their
     winnow fingerprint SETS; pairs with score >= ``threshold`` survive.
@@ -184,7 +183,7 @@ def winnow_pairs(
     id-keyed joins for the counts. The self-join ships only (id, fp)
     rows — text never crosses the wire.
     """
-    fps = winnow_fingerprints(df, text_col, id_col, k, window, engine)
+    fps = winnow_fingerprints(df, text_col, id_col, k, window)
     fps = fps.persist()
     counts = fps.groupBy(id_col).agg(F.count(F.lit(1)).alias("_nfp"))
     capped, dropped = _cap_buckets(fps, ["fp"], max_bucket_size)

@@ -311,3 +311,35 @@ def test_decontaminate_corpus_side_never_shuffles(spark, tmp_path):
     assert plan.count("Exchange hashpartitioning") == 2, plan
     assert plan.count("BroadcastExchange") >= 2, plan
     assert "SortMergeJoin" not in plan, plan
+
+
+def test_gate_scan_parallelism_is_the_dedup_rule(spark, tmp_path):
+    """``_t(wide=True)`` repartitions a gate table through the library's
+    one scan-parallelism rule (``dedup._ensure_parallelism``): a
+    single-file table gets one round-robin exchange, a table that
+    already has enough scan partitions gets none, and ``wide=False``
+    never adds one."""
+    import importlib
+    import sys
+    from pathlib import Path
+
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+    try:
+        entry = importlib.import_module("__spark_entry__")
+    finally:
+        sys.path.pop(0)
+    enough = min(spark.sparkContext.defaultParallelism, 8)
+    rows = spark.range(0, 4000).withColumn("text", F.concat(F.lit("t"), "id"))
+    rows.coalesce(1).write.parquet(str(tmp_path / "one.parquet"))
+    rows.repartition(enough).write.parquet(str(tmp_path / "many.parquet"))
+    sf_dir = str(tmp_path)
+    assert entry._t(spark, sf_dir, "many").rdd.getNumPartitions() >= enough
+
+    def exchanges(name, **kw):
+        return _plan(entry._t(spark, sf_dir, name, **kw)).count(
+            "RoundRobinPartitioning"
+        )
+
+    assert exchanges("one", wide=True) == 1
+    assert exchanges("one") == 0
+    assert exchanges("many", wide=True) == 0

@@ -68,9 +68,8 @@ def docs(spark):
     return spark.createDataFrame(DOCS, ["doc_id", "text"])
 
 
-@pytest.mark.parametrize("engine", ["arrow", "explode"])
-def test_matches_python_oracle(docs, engine):
-    out = repetition_stats(docs, top_ns=(2,), dup_ns=(3,), engine=engine)
+def test_matches_python_oracle(docs):
+    out = repetition_stats(docs, top_ns=(2,), dup_ns=(3,))
     got = {
         r["doc_id"]: (
             round(r["dup_line_frac"], 9),
@@ -85,9 +84,9 @@ def test_matches_python_oracle(docs, engine):
         assert got[did] == want, (did, got[did], want)
 
 
-def test_engines_identical_on_boilerplate_corpus(spark):
-    """arrow (default, zero-shuffle) vs explode (pure-JVM) engines on a
-    corpus with planted line + n-gram repetition: bit-identical doubles."""
+def test_matches_python_oracle_on_boilerplate_corpus(spark):
+    """A corpus with planted line + n-gram repetition, every
+    (top_n, dup_n) pair against the Python reference: identical doubles."""
     import random
 
     rng = random.Random(7)
@@ -99,17 +98,16 @@ def test_engines_identical_on_boilerplate_corpus(spark):
         text = "\n".join([body[:50], boiler, body[20:70], boiler])
         rows.append((d, text))
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    kw = dict(top_ns=(2, 3), dup_ns=(3, 5))
-    cols = [
-        "doc_id", "dup_line_frac", "dup_line_char_frac",
-        "top_2gram_char_frac", "top_3gram_char_frac",
-        "dup_3gram_char_frac", "dup_5gram_char_frac",
-    ]
-    a = {r["doc_id"]: r for r in
-         repetition_stats(docs, engine="arrow", **kw).select(cols).collect()}
-    b = {r["doc_id"]: r for r in
-         repetition_stats(docs, engine="explode", **kw).select(cols).collect()}
-    assert a == b
+    for top_n in (2, 3):
+        for dup_n in (3, 5):
+            cols = [
+                "doc_id", "dup_line_frac", "dup_line_char_frac",
+                f"top_{top_n}gram_char_frac", f"dup_{dup_n}gram_char_frac",
+            ]
+            out = repetition_stats(docs, top_ns=(top_n,), dup_ns=(dup_n,))
+            got = {r[0]: tuple(r[1:]) for r in out.select(cols).collect()}
+            want = {d: _py_stats(text, top_n, dup_n) for d, text in rows}
+            assert got == want, (top_n, dup_n)
 
 
 def test_arrow_engine_is_zero_shuffle(docs):
