@@ -1064,7 +1064,7 @@ def q_minhash_neardup(spark, sf_dir):
     (measured gap: no pair between 0.45 and 0.9)."""
     from syslog_ng_spark.operators.dedup import minhash_lsh
 
-    docs = _t(spark, sf_dir, "documents", wide=True)
+    docs = _t(spark, sf_dir, "documents")
     out = minhash_lsh(docs, threshold=0.5)
     return out.select(
         "id_a", "id_b", F.round("jaccard", 6).alias("jaccard")
@@ -3656,7 +3656,7 @@ def q_winnow_fps(spark, sf_dir):
     kernel == window-SQL across engines AND processes."""
     from syslog_ng_spark.operators.winnow import winnow_fingerprints
 
-    docs = _t(spark, sf_dir, "documents", wide=True)
+    docs = _t(spark, sf_dir, "documents")
     return winnow_fingerprints(docs, k=5, window=4, engine="pandas").orderBy(
         "doc_id", "fp"
     )

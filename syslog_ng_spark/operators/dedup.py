@@ -92,7 +92,6 @@ def _finish_near_dup(
     dropped: DataFrame | None,
     cached: list,
     eager: bool = False,
-    reliable_checkpoint: bool | None = None,
 ) -> DataFrame:
     """The epilogue every near-dup family shares: the one audit record
     and the lifetime of what the family cached.
@@ -105,7 +104,7 @@ def _finish_near_dup(
     at once; lazy frees them when the result is garbage-collected."""
     cached = [c for c in cached if c is not None]
     if eager:
-        out = truncate_lineage(out, reliable=reliable_checkpoint)
+        out = truncate_lineage(out)
         for c in cached:
             c.unpersist()
     else:
@@ -255,7 +254,6 @@ def minhash_lsh(
     threshold: float = 0.7,
     max_bucket_size: int = 1000,
     eager: bool = False,
-    reliable_checkpoint: bool | None = None,
 ) -> DataFrame:
     """Near-duplicate PAIRS (id_a < id_b, jaccard ≥ threshold).
 
@@ -276,11 +274,13 @@ def minhash_lsh(
     Set ``None`` to disable.
 
     ``eager=True`` materializes the (small) verified pair set via
-    localCheckpoint and unpersists the banded cache immediately — the
-    round-1 version leaked a persist of the full shingle frame. With
-    ``eager=False`` (default) the result stays lazy (single execution)
-    and the banded cache is unpersisted automatically when the returned
-    DataFrame is garbage-collected (weakref finalizer).
+    ``truncate_lineage`` (a reliable checkpoint when the session has a
+    checkpoint dir, ``localCheckpoint`` otherwise) and unpersists the
+    banded cache immediately — the round-1 version leaked a persist of
+    the full shingle frame. With ``eager=False`` (default) the result
+    stays lazy (single execution) and the banded cache is unpersisted
+    automatically when the returned DataFrame is garbage-collected
+    (weakref finalizer).
     """
     r = k // bands
     df = _ensure_parallelism(df)
@@ -310,9 +310,7 @@ def minhash_lsh(
     # it is tiny (two longs per candidate pair) — cache it.
     cand = _bucket_pairs(kept, ["band", "bh"]).select("id_a", "id_b").persist()
     verified = _exact_jaccard_on_pairs(cand, df, text_col, id_col, threshold)
-    return _finish_near_dup(
-        verified, dropped, [banded, cand], eager, reliable_checkpoint
-    )
+    return _finish_near_dup(verified, dropped, [banded, cand], eager)
 
 
 def _unpersist_on_gc(result: DataFrame, cached) -> None:
@@ -614,7 +612,6 @@ def simhash_near_dup(
     prefilter_hamming: int = 5,
     block_chunks: int | str = "auto",
     eager: bool = False,
-    reliable_checkpoint: bool | None = None,
 ) -> DataFrame:
     """Near-dup pairs: SimHash block buckets generate candidates, a cheap
     hamming prefilter (xor + bit_count on two longs, applied before any
@@ -643,9 +640,10 @@ def simhash_near_dup(
     from the start) is the other scale-safe candidate generator for the
     same Jaccard predicate.
 
-    When ``eager``, the verified pair set is materialized. Either way
-    the skew-capped buckets ride on the result as the frame
-    ``out._dropped_buckets`` (see ``_finish_near_dup``)."""
+    When ``eager``, the verified pair set is materialized via
+    ``truncate_lineage`` (reliable when the session has a checkpoint
+    dir). Either way the skew-capped buckets ride on the result as the
+    frame ``out._dropped_buckets`` (see ``_finish_near_dup``)."""
     if block_chunks == "auto":
         block_chunks = _auto_block_chunks(
             df, text_col, features, n_chunks, max_bucket_size, prefilter_hamming
@@ -657,7 +655,7 @@ def simhash_near_dup(
     )
     pairs = cand.select("id_a", "id_b").persist()
     out = _exact_jaccard_on_pairs(pairs, df, text_col, id_col, threshold)
-    res = _finish_near_dup(out, dropped, [pairs], eager, reliable_checkpoint)
+    res = _finish_near_dup(out, dropped, [pairs], eager)
     res._block_chunks = block_chunks
     return res
 
@@ -739,7 +737,6 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 25,
-    reliable_checkpoint: bool | None = None,
     driver_max_edges: int | None = 2_000_000,
 ) -> DataFrame:
     """Distributed connected components over an undirected pair list —
@@ -760,7 +757,7 @@ def connected_components(
     EXACT components, not an approximation. The cut uses the RELIABLE
     ``df.checkpoint()`` when a checkpoint dir is configured (multi-hour
     100-TB runs survive executor loss), ``localCheckpoint`` otherwise —
-    see operators/lineage.py; ``reliable_checkpoint`` forces either.
+    see operators/lineage.py.
 
     Returns (id, component) for every id appearing in ``pairs`` —
     component = the min id of the cluster. Ids with no pairs are their
@@ -808,10 +805,7 @@ def connected_components(
 
     sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct()
     sym = sym.persist()
-    comp = truncate_lineage(
-        sym.select("u").distinct().withColumn("c", F.col("u")),
-        reliable=reliable_checkpoint,
-    )
+    comp = truncate_lineage(sym.select("u").distinct().withColumn("c", F.col("u")))
     for _i in range(max_iter):
         nbr = (
             sym.join(
@@ -840,8 +834,7 @@ def connected_components(
                 "u",
                 F.least(F.col("c"), F.coalesce("_rc", "c")).alias("c"),
                 "_pc",
-            ),
-            reliable=reliable_checkpoint,
+            )
         )
         changed = jumped.filter(F.col("c") != F.col("_pc")).count()
         comp = jumped.drop("_pc")

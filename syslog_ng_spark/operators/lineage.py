@@ -8,16 +8,12 @@ the job, because truncated lineage cannot be recomputed. That is fine on
 ``local[N]`` (one JVM — if it dies, everything dies) but a guaranteed
 restart on a multi-hour 100-TB cluster run with executor churn.
 
-``truncate_lineage`` picks the right mechanism:
-
-- ``reliable=None`` (default): use the RELIABLE ``df.checkpoint()``
-  (stored on the fault-tolerant checkpoint dir, survives executor loss)
-  whenever ``spark.sparkContext.setCheckpointDir`` has been called, and
-  fall back to ``localCheckpoint`` otherwise — so a cluster deployment
-  opts in with one session call, and local runs keep the cheap path.
-- ``reliable=True``: force ``df.checkpoint()``; raises if no checkpoint
-  dir is configured (failing fast beats dying 3 hours in).
-- ``reliable=False``: force ``localCheckpoint``.
+``truncate_lineage`` lets the session decide: it uses the RELIABLE
+``df.checkpoint()`` (stored on the fault-tolerant checkpoint dir,
+survives executor loss) whenever ``spark.sparkContext.setCheckpointDir``
+has been called, and ``localCheckpoint`` otherwise — so a cluster
+deployment opts in with one session call, and local runs keep the cheap
+path. Operators carry no option of their own for it.
 """
 
 from __future__ import annotations
@@ -25,20 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def has_reliable_checkpoint_dir(df: DataFrame) -> bool:
-    sc = df.sparkSession.sparkContext
-    d = sc.getCheckpointDir()
-    return d is not None
-
-
-def truncate_lineage(df: DataFrame, reliable: bool | None = None, eager: bool = True) -> DataFrame:
-    if reliable is None:
-        reliable = has_reliable_checkpoint_dir(df)
-    if reliable:
-        if not has_reliable_checkpoint_dir(df):
-            raise ValueError(
-                "reliable checkpointing requested but no checkpoint dir is "
-                "set — call spark.sparkContext.setCheckpointDir(...) first"
-            )
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
+def truncate_lineage(df: DataFrame) -> DataFrame:
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint()
+    return df.localCheckpoint()

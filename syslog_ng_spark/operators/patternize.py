@@ -339,7 +339,6 @@ def patternize(
     strategy: str = "auto",
     max_broadcast_words: int = 2_000_000,
     id_col: str | None = None,
-    reliable_checkpoint: bool | None = None,
 ) -> DataFrame:
     """Mine frequent message templates — ``pdbtool patternize``
     (pdbtool.c:1147, defaults mirrored: support threshold 4% of lines,
@@ -353,7 +352,8 @@ def patternize(
     ``iterate_outliers`` (the CLI's -o) loops on the lines that joined
     no surviving cluster, recomputing support as outliers × threshold%,
     until a round mines nothing; per-round lineage is cut via
-    :func:`truncate_lineage` (reliable when a checkpoint dir is set)."""
+    :func:`truncate_lineage` (reliable when the session has a checkpoint
+    dir, ``localCheckpoint`` otherwise)."""
     # deduplicate the delimiter set and force the space in, pdbtool.c:1160
     seen = " "
     for ch in delimiters:
@@ -383,7 +383,7 @@ def patternize(
     cur_support = support
     while True:
         keyed, clusters = one_round(cur, cur_support)
-        clusters = truncate_lineage(clusters, reliable=reliable_checkpoint)
+        clusters = truncate_lineage(clusters)
         if clusters.limit(1).count() == 0:
             if acc is None:
                 acc = clusters  # empty frame with the right schema
@@ -394,8 +394,7 @@ def patternize(
         # drop, patternize.c:204-209)
         cur = truncate_lineage(
             keyed.join(clusters.select(F.col("cluster_key").alias("ptz_key")), "ptz_key", "left_anti")
-            .drop("ptz_key", "ptz_candidate", "ptz_pattern"),
-            reliable=reliable_checkpoint,
+            .drop("ptz_key", "ptz_candidate", "ptz_pattern")
         )
         n = cur.count()
         cur_support = int(n * (support_threshold / 100.0))

@@ -203,7 +203,6 @@ def embedding_near_dup(
     eager: bool = False,
     max_gather_ids: int = 1_000_000,
     max_gather_pairs: int = 500_000,
-    reliable_checkpoint: bool | None = None,
 ) -> DataFrame:
     """Pairs (id_a < id_b) with exact cosine ≥ threshold; candidates come
     from ``n_tables`` independent random-hyperplane LSH tables of
@@ -237,7 +236,9 @@ def embedding_near_dup(
     NOTE: this operator is EAGER at call time even with ``eager=False``:
     the candidate stage runs immediately (to count candidate ids and, on
     the gather path, build the broadcast matrix). ``eager=True``
-    additionally checkpoints the final result.
+    additionally checkpoints the final result (``truncate_lineage``: a
+    reliable checkpoint when the session has a checkpoint dir,
+    ``localCheckpoint`` otherwise).
 
     ``max_bucket_size`` is the same skew guard as minhash_lsh (a hot
     bucket of m vectors otherwise costs m² candidates), with the same
@@ -402,7 +403,7 @@ def embedding_near_dup(
             .filter(F.col("id_a") != F.col("id_b"))
             .dropDuplicates(["id_a", "id_b"])
         )
-    res = _finish_near_dup(out, dropped, [cand, bc], eager, reliable_checkpoint)
+    res = _finish_near_dup(out, dropped, [cand, bc], eager)
     res._verify_strategy = "gather" if bc is not None else "distributed"
     return res
 

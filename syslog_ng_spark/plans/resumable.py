@@ -8,16 +8,17 @@ marker — committed only after all sinks land — records per-sink counts
 and wall time. A killed run re-executes only missing units, and replays
 cannot change totals (persist-state/bookmark analogue,
 /root/reference/lib/ack-tracker/bookmark.h:39-48).
+
+Skipping, timing and committing are ``process_partitioned``'s; this
+module only routes and writes one unit.
 """
 
 from __future__ import annotations
 
-import time
-
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..sources.checkpoint import CheckpointedRun
+from ..sources.checkpoint import CheckpointedRun, process_partitioned
 from .pipeline import Pipeline
 
 
@@ -36,47 +37,37 @@ def run_resumable(
         units = sorted(
             r[0] for r in df.select(unit_col).distinct().collect()
         )
-    processed = []
-    for u in units:
-        if ckpt.is_done(str(u)):
-            continue
-        t0 = time.time()
-        part = df.filter(F.col(unit_col) == u)
+
+    def write_unit(part: DataFrame, u) -> dict:
         routed = pipeline.route(part, persist=True)
         try:
-            counts = {}
             for p in pipeline.paths:
-                dest = f"{base_path}/{p.name}/{unit_col}={u}"
-                sink_df = routed.sink(p.name)
-                sink_df.write.mode("overwrite").format(fmt).save(dest)
-                counts[p.name] = None  # filled from the single metrics agg
-            m = {
-                r.path: (r.route_ingress_total, r.route_egress_total)
+                routed.sink(p.name).write.mode("overwrite").format(fmt).save(
+                    f"{base_path}/{p.name}/{unit_col}={u}"
+                )
+            sinks = {
+                r.path: {"in": r.route_ingress_total, "out": r.route_egress_total}
                 for r in routed.metrics().collect()
             }
         finally:
             routed.unpersist()
-        wall = time.time() - t0
-        rows_out = sum(v[1] for v in m.values())
-        ckpt.commit(
-            str(u),
-            wall_ms=int(wall * 1000),
-            rows=rows_out,
-            sinks={k: {"in": v[0], "out": v[1]} for k, v in m.items()},
-            throughput_rows_per_s=round(rows_out / wall, 1) if wall > 0 else None,
-        )
-        processed.append(u)
-    return processed
+        return {"rows": sum(v["out"] for v in sinks.values()), "sinks": sinks}
+
+    return process_partitioned(df, unit_col, units, ckpt, write_unit)
 
 
 def sink_totals(
     spark: SparkSession, base_path: str, pipeline: Pipeline, fmt: str = "parquet"
 ) -> dict:
-    """Read back every sink's total row count (the resume-parity oracle)."""
+    """Read back every sink's total row count (the resume-parity oracle).
+    A sink that was never written counts 0; one that cannot be read
+    raises."""
     out = {}
     for p in pipeline.paths:
         try:
             out[p.name] = spark.read.format(fmt).load(f"{base_path}/{p.name}").count()
-        except Exception:  # noqa: BLE001 — sink may be empty/absent
+        except AnalysisException as e:
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
             out[p.name] = 0
     return out

@@ -1,2 +1,2 @@
-from .io import read_table, read_transcripts, write_sink  # noqa: F401
+from .io import read_transcripts  # noqa: F401
 from .checkpoint import CheckpointedRun  # noqa: F401

@@ -26,9 +26,11 @@ from pyspark.sql import functions as F
 class CheckpointedRun:
     """Tracks completed units in a JSON-lines marker file.
 
-    Marker granularity is the caller's unit key (string). The marker file
-    is the persist-state file; one line per completed unit carries the
-    lineage/metrics payload (FIXTURES.md F7 shape).
+    Markers are keyed by ``str(unit)``, so any unit value (a date, an
+    int bucket) commits. The marker file is the persist-state file; one
+    line per completed unit carries the lineage/metrics payload
+    (FIXTURES.md F7 shape). It is read once per instance; ``commit``
+    keeps the in-memory done set current.
     """
 
     def __init__(self, state_dir: str, run_id: str = "run"):
@@ -36,29 +38,37 @@ class CheckpointedRun:
         self.run_id = run_id
         os.makedirs(state_dir, exist_ok=True)
         self.marker_path = os.path.join(state_dir, f"{run_id}.markers.jsonl")
+        self._done: set[str] = set()
+        if os.path.exists(self.marker_path):
+            with open(self.marker_path) as fh:
+                self._done = {json.loads(line)["unit"] for line in fh if line.strip()}
 
-    def done_units(self) -> set[str]:
-        if not os.path.exists(self.marker_path):
-            return set()
-        with open(self.marker_path) as fh:
-            return {json.loads(line)["unit"] for line in fh if line.strip()}
+    def is_done(self, unit) -> bool:
+        return str(unit) in self._done
 
-    def is_done(self, unit: str) -> bool:
-        return unit in self.done_units()
-
-    def commit(self, unit: str, **metrics) -> None:
-        rec = {"unit": unit, "run_id": self.run_id, "wall_ts": time.time(), **metrics}
+    def commit(self, unit, **metrics) -> None:
+        key = str(unit)
+        rec = {"unit": key, "run_id": self.run_id, "wall_ts": time.time(), **metrics}
         with open(self.marker_path, "a") as fh:
             fh.write(json.dumps(rec) + "\n")
+        self._done.add(key)
 
-    def run_unit(self, unit: str, fn) -> dict | None:
+    def run_unit(self, unit, fn) -> dict | None:
         """Execute ``fn()`` for a unit unless already done; commit after.
-        ``fn`` must be idempotent (overwrite-by-unit writes)."""
+        ``fn`` must be idempotent (overwrite-by-unit writes) and returns
+        a dict of marker fields; a ``rows`` field also yields
+        ``throughput_rows_per_s``."""
         if self.is_done(unit):
             return None
         t0 = time.time()
         result = fn() or {}
-        self.commit(unit, wall_ms=int((time.time() - t0) * 1000), **result)
+        wall = time.time() - t0
+        marker = {"wall_ms": int(wall * 1000), **result}
+        if "rows" in result:
+            marker["throughput_rows_per_s"] = (
+                round(result["rows"] / wall, 1) if wall > 0 else None
+            )
+        self.commit(unit, **marker)
         return result
 
     def metrics_df(self, spark: SparkSession) -> DataFrame:
@@ -68,19 +78,19 @@ class CheckpointedRun:
 def process_partitioned(
     df: DataFrame,
     unit_col: str,
-    units: list[str],
+    units: list,
     ckpt: CheckpointedRun,
     write_unit,
-) -> list[str]:
+) -> list:
     """Drive a resumable run: for each unit value, filter (partition
     pruning when unit_col is the table's partition key), write, mark.
-    Returns the units processed in THIS invocation."""
+    ``write_unit(part, unit)`` returns a row count, a dict of marker
+    fields, or None. Returns the units processed in THIS invocation."""
     processed = []
     for u in units:
         def job(u=u):
-            part = df.filter(F.col(unit_col) == u)
-            rows = write_unit(part, u)
-            return {"rows": rows} if isinstance(rows, int) else {}
+            res = write_unit(df.filter(F.col(unit_col) == u), u)
+            return {"rows": res} if isinstance(res, int) else res
 
         if ckpt.run_unit(u, job) is not None:
             processed.append(u)

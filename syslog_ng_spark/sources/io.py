@@ -1,24 +1,17 @@
 """Sources & sinks (SURVEY.md §2.1/§2.2).
 
-The reference's file/socket/kafka sources collapse to table reads here:
-the corpus lives in an Iceberg table (parquet fallback — the Iceberg jars
-aren't in this container, so the format is chosen at runtime). Framing /
-header-parse concerns become columns at generation/ingest time.
+The reference's file/socket/kafka sources collapse to plain parquet
+table reads here. Framing / header-parse concerns become columns at
+generation/ingest time.
 
-Sinks are table writes; the reference's batch_lines/flush tuning maps to
-file sizing (`maxRecordsPerFile`, partition coalescing).
+Sinks are table writes. Routed sinks are written by
+``RoutedFrame.write_sinks`` (plans/pipeline.py); this module keeps the
+$HOST-templated partitioned writer and the pre-bucketed table helpers.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-
-try:  # Iceberg if the runtime has it; parquet otherwise
-    import importlib.util
-
-    HAVE_ICEBERG = importlib.util.find_spec("pyiceberg") is not None
-except Exception:  # pragma: no cover
-    HAVE_ICEBERG = False
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -26,32 +19,8 @@ TABLES = [
 ]
 
 
-def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one driver-provided table (predicate/column pushdown comes
-    free from the parquet scan — verify with .explain → PushedFilters)."""
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
 def read_transcripts(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
-
-
-def write_sink(
-    df: DataFrame,
-    path: str,
-    fmt: str = "parquet",
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-    max_records_per_file: int | None = None,
-) -> None:
-    """Write a sink table. ``max_records_per_file`` is the batch_lines
-    analogue (logthrdestdrv.h:155) — bounds file size at 100 TB."""
-    w = df.write.mode(mode).format(fmt)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    if max_records_per_file:
-        w = w.option("maxRecordsPerFile", str(max_records_per_file))
-    w.save(path)
 
 
 def write_sink_templated(

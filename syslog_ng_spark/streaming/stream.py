@@ -52,10 +52,7 @@ def stream_route(
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         routed = pipeline.route(batch_df, persist=True)
         try:
-            for p in pipeline.paths:
-                routed.sink(p.name).write.mode("append").format(fmt).save(
-                    f"{base_path}/{p.name}"
-                )
+            routed.write_sinks(base_path, fmt, mode="append")
         finally:
             routed.unpersist()
 

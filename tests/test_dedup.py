@@ -289,11 +289,12 @@ def test_dedup_by_component_transitive(spark):
     assert {(r.doc_id, r.component) for r in out} == {(1, 1), (9, 9)}
 
 
-def test_connected_components_reliable_checkpoint(spark, tmp_path):
-    """VERDICT r4 #2: with a checkpoint dir configured, the per-iteration
-    lineage cut upgrades to the RELIABLE df.checkpoint() (executor-loss
-    safe on multi-hour cluster runs) and the components are identical to
-    the localCheckpoint run."""
+def test_connected_components_reliable_checkpoint(spark, tmp_path, monkeypatch):
+    """VERDICT r4 #2: the session's checkpoint dir picks the per-iteration
+    lineage cut. With no dir set the loop cuts with localCheckpoint; with
+    a dir set it upgrades to the RELIABLE df.checkpoint() (executor-loss
+    safe on multi-hour cluster runs), and the components are identical."""
+    import os
     import random
 
     rng = random.Random(7)
@@ -302,42 +303,43 @@ def test_connected_components_reliable_checkpoint(spark, tmp_path):
     pdf = spark.createDataFrame(
         [(a, b) for a, b in pairs if a != b], "id_a long, id_b long"
     )
-    # driver_max_edges=None: the checkpoint machinery only engages on
-    # the distributed loop (the driver fast path has no lineage to cut)
-    local = {(r.id, r.component) for r in D.connected_components(pdf, reliable_checkpoint=False, driver_max_edges=None).collect()}
+    calls = []
+
+    def spy(name):
+        orig = getattr(type(pdf), name)
+
+        def wrapped(self, *a, **k):
+            calls.append(name)
+            return orig(self, *a, **k)
+
+        return wrapped
+
+    for name in ("checkpoint", "localCheckpoint"):
+        monkeypatch.setattr(type(pdf), name, spy(name))
+
+    def run():
+        calls.clear()
+        # driver_max_edges=None: the checkpoint machinery only engages on
+        # the distributed loop (the driver fast path has no lineage to cut)
+        out = D.connected_components(pdf, driver_max_edges=None)
+        return {(r.id, r.component) for r in out.collect()}, set(calls)
 
     sc = spark.sparkContext
     prev = sc.getCheckpointDir()
-    sc.setCheckpointDir(str(tmp_path / "ckpt"))
+    sc._jsc.setCheckpointDir(None)
     try:
-        from syslog_ng_spark.operators.lineage import has_reliable_checkpoint_dir
-
-        assert has_reliable_checkpoint_dir(pdf)
-        # auto mode picks the reliable path now
-        auto = {(r.id, r.component) for r in D.connected_components(pdf, driver_max_edges=None).collect()}
-        forced = {
-            (r.id, r.component)
-            for r in D.connected_components(pdf, reliable_checkpoint=True, driver_max_edges=None).collect()
-        }
-        assert auto == local and forced == local
+        local, local_calls = run()
+        assert local_calls == {"localCheckpoint"}
+        ckpt = tmp_path / "ckpt"
+        sc.setCheckpointDir(str(ckpt))
+        reliable, reliable_calls = run()
+        assert reliable_calls == {"checkpoint"}
+        assert reliable == local
         # checkpoint files actually landed in the dir
-        import os
-
-        assert any(os.scandir(str(tmp_path / "ckpt")))
+        assert any(os.scandir(str(ckpt)))
     finally:
         # restore: Option(null) unsets cleanly on the Scala side
         sc._jsc.setCheckpointDir(prev)
-
-
-def test_reliable_checkpoint_requires_dir(spark):
-    from syslog_ng_spark.operators.lineage import truncate_lineage
-
-    df = spark.range(3)
-    if spark.sparkContext.getCheckpointDir() is None:
-        with pytest.raises(ValueError, match="checkpoint dir"):
-            truncate_lineage(df, reliable=True)
-    # localCheckpoint path always works
-    assert truncate_lineage(df, reliable=False).count() == 3
 
 
 def test_simhash_auto_keying(spark):

@@ -442,8 +442,9 @@ def test_stream_route_parity_gate(spark):
     same corpus and raises on divergence — run it from CI too."""
     import importlib
     import sys
+    from pathlib import Path
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     try:
         entry = importlib.import_module("__spark_entry__")
     finally:
